@@ -1,0 +1,13 @@
+package perfbench
+
+/** Order statistics the report uses. */
+object Stats {
+  /** Median; 0 for an empty sample (a layer the workload never enters). */
+  def median(xs: Seq[Double]): Double =
+    if (xs.isEmpty) 0.0
+    else {
+      val s = xs.sorted
+      val n = s.size
+      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
+    }
+}
