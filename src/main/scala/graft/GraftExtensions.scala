@@ -11,12 +11,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * }}}
   *
   * registers every graft function (cosine, sign-RP LSH keys, signature
-  * agreement, bloom probe) at session build time — no per-query
-  * `X.register(spark)` calls, and the functions exist in plain
-  * `spark.sql(...)` sessions the library never touches (notebooks,
-  * Thrift server). The per-object `register` methods stay for ad-hoc
-  * use; both paths share one builder per function, so SQL-surface
-  * behavior cannot drift between them.
+  * agreement, bloom probes, MinHash signature) at session build time, so
+  * the functions also exist in plain `spark.sql(...)` sessions the
+  * library never touches (notebooks, Thrift server). This is the only
+  * registration path: graft code calls the functions by name and expects
+  * a session built with this extension ([[graft.GraftSession]] sets it).
+  * A session built without it gets the same set from [[GraftExtensions.registerAll]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
@@ -50,10 +50,14 @@ object GraftExtensions {
     "graft_minhash_sig" -> graft.functions.MinHashSig.builder)
 
   /** The same set onto an EXISTING session (e.g. `spark.newSession()`),
-    * for callers who cannot influence session construction. */
-  def registerAll(spark: SparkSession): Unit =
+    * for callers who cannot influence session construction. Idempotent:
+    * only absent functions are registered, so a session that already has
+    * them is left as it is. */
+  def registerAll(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(new FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }

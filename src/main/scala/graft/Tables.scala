@@ -17,8 +17,8 @@ object Tables {
 
   /** events.parquet's `ts` encoding has varied across driver testdata
     * generations: INT64 TIMESTAMP(NANOS) (reads as LongType nanos under
-    * spark.sql.legacy.parquet.nanosAsLong=true, which Verify/Bench/test
-    * sessions all set) and, since the round-9 regeneration, plain
+    * spark.sql.legacy.parquet.nanosAsLong=true, which GraftSession sets)
+    * and, since the round-9 regeneration, plain
     * timestamp[us] with isAdjustedToUTC=false (reads as TIMESTAMP_NTZ).
     * Normalize BOTH to a session-TZ TimestampType column (sessions run
     * UTC, so the NTZ cast relabels the same wall-clock micros DuckDB's
@@ -33,9 +33,9 @@ object Tables {
       case Some(f) if f.dataType == org.apache.spark.sql.types.TimestampNTZType =>
         // CONTRACT: the NTZ->LTZ cast relabels wall-clock micros in the
         // SESSION time zone, so this branch is only instant-correct in a
-        // UTC session — which every graft entrypoint pins
-        // (GraftSession/Verify/Bench/test sessions all set
-        // spark.sql.session.timeZone=UTC). A non-UTC ad-hoc session
+        // UTC session — which every graft entrypoint pins (GraftSession,
+        // which builds them all, sets spark.sql.session.timeZone=UTC).
+        // A non-UTC ad-hoc session
         // would shift these instants by its zone offset; the nanos
         // branch above has no such dependence (timestamp_micros is
         // absolute).

@@ -89,14 +89,6 @@ object IncrementalCurate {
       .withColumn("split", graft.operators.Splits.hashSplit(col("doc_id")))
   }
 
-  /** GRAFT_CURATE_DEBUG=1 prints per-stage wall times (the two eager
-    * checkpoints bound the stages) — diagnosis for scale runs. */
-  private def debugStage(tag: String, t0: Long): Long = {
-    if (sys.env.contains("GRAFT_CURATE_DEBUG"))
-      println(f"CURATEDBG $tag%-12s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    System.nanoTime()
-  }
-
   /** Curate `batch` (raw ingest rows) against the curated-history store
     * at `curatedRoot` and its persisted PORTABLE band index generation
     * `indexGen`. Returns the batch's quality+exact survivors with
@@ -106,7 +98,6 @@ object IncrementalCurate {
     * band rows. */
   def curateBatch(spark: SparkSession, batch: DataFrame,
                   curatedRoot: String, indexGen: String): DataFrame = {
-    var t0 = System.nanoTime()
     // at-least-once ingest hardening: a REDELIVERED row (its doc_id
     // already curated) is dropped up front — without this, a replayed
     // feed would publish a duplicate id and the next index advance would
@@ -136,7 +127,6 @@ object IncrementalCurate {
           .withColumn("content_hash", md5(col("text"))),
         "content_hash")
       .localCheckpoint(true) // batch-sized; feeds bands, CC and publish
-    t0 = debugStage("gate+exact", t0)
     // near-dup: O(batch) portable signatures probed against the chain's
     // SPLIT layout — phase 1 streams the index's 24 B narrow band rows,
     // phase 2 fetches one sig row per CANDIDATE id (the r13 verdict's
@@ -148,7 +138,6 @@ object IncrementalCurate {
       .filter(col("est_jaccard") >= MinJaccard)
       .select("src", "dst")
       .localCheckpoint(true) // pairs are small; CC iterates over them
-    t0 = debugStage("probe", t0)
     val bIds = keep.select(col("doc_id"))
     // an endpoint outside the batch is a history exact-survivor: the
     // batch endpoint of that pair can never be canonical

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -61,8 +60,4 @@ object BloomBytesContain {
 
   private[graft] val builder: Seq[Expression] => Expression =
     exprs => BloomBytesContain(exprs.head, exprs(1))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_probe", builder, "built-in")
 }

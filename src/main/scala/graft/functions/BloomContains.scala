@@ -3,7 +3,6 @@ package graft.functions
 import java.io.ByteArrayInputStream
 import java.util.Base64
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -67,10 +66,6 @@ object BloomContains {
         "graft_bloom_contains: second argument must be a string literal " +
           s"(base64 bloom bytes), got $other")
     }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains", builder, "built-in")
 
   def serialize(bloom: BloomFilter): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()

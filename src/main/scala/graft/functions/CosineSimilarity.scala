@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -24,7 +23,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   extends BinaryExpression {
 
   // ExpectsInputTypes is sealed behind private[sql] AbstractDataType, so
-  // the type contract is enforced explicitly (the register() builder also
+  // the type contract is enforced explicitly (the SQL builder also
   // inserts casts for float arrays).
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -100,16 +99,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Expression builder shared by [[register]] and
-    * [[graft.GraftExtensions]]. */
+  /** `graft_cosine(a, b)` builder, registered by [[graft.GraftExtensions]].
+    * Float arrays are widened to double via an inserted Cast. */
   private[graft] val builder: Seq[Expression] => Expression =
     exprs => CosineSimilarity(widen(exprs(0)), widen(exprs(1)))
-
-  /** Register `graft_cosine(a, b)` for SQL/expr use (idempotent).
-    * Float arrays are widened to double via an inserted Cast. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", builder, "built-in")
 
   private def widen(e: Expression): Expression = e.dataType match {
     case ArrayType(FloatType, n) => Cast(e, ArrayType(DoubleType, n))

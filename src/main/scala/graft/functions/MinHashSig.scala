@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
@@ -104,7 +103,7 @@ object MinHashSig {
     UnsafeArrayData.fromPrimitiveArray(mins)
   }
 
-  /** Register `graft_minhash_sig(toks, numPerms)` for SQL/expr use;
+  /** `graft_minhash_sig(toks, numPerms)` builder for SQL/expr use;
     * `numPerms` must be a FOLDABLE int-typed expression — a bare int
     * literal or anything constant-foldable to one (`CAST(16 AS INT)`,
     * `8*2`), evaluated here at plan time (r14 ADVICE: the
@@ -126,8 +125,4 @@ object MinHashSig {
         s"graft_minhash_sig: numPerms must be a foldable INT expression, " +
           s"got $other")
     }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig", builder, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -129,7 +128,7 @@ object SignRpKeys {
     ((z >>> 11) % 1000L).toDouble / 500.0 - 1.0
   }
 
-  /** Register `graft_sign_rp_keys(emb, bands, rowsPerBand)` (idempotent);
+  /** `graft_sign_rp_keys(emb, bands, rowsPerBand)` builder;
     * the band parameters must be integer literals. Float arrays widen via
     * an inserted Cast. */
   private[graft] val builder: Seq[Expression] => Expression =
@@ -142,10 +141,6 @@ object SignRpKeys {
       SignRpKeys(widen(exprs(0)), lit(exprs(1), "bands"),
         lit(exprs(2), "rowsPerBand"))
     }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sign_rp_keys", builder, "built-in")
 
   private def widen(e: Expression): Expression = e.dataType match {
     case ArrayType(FloatType, n) => Cast(e, ArrayType(DoubleType, n))

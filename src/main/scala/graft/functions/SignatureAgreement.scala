@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -72,11 +71,7 @@ case class SignatureAgreement(left: Expression, right: Expression)
 }
 
 object SignatureAgreement {
-  /** Register `graft_sig_agreement(a, b)` for SQL/expr use (idempotent). */
+  /** `graft_sig_agreement(a, b)` builder for SQL/expr use. */
   private[graft] val builder: Seq[Expression] => Expression =
     exprs => SignatureAgreement(exprs(0), exprs(1))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sig_agreement", builder, "built-in")
 }

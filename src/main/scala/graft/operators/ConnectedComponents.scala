@@ -106,7 +106,6 @@ object ConnectedComponents {
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
       val neighborLabels = bidir.join(labels, bidir("src") === labels("id"))
         .select(col("dst").as("id"), col("lbl"))
       // checkpoint BEFORE the pointer-jump self-join: truncating here both
@@ -129,8 +128,6 @@ object ConnectedComponents {
         .observe(obs, sum("lbl").as("s"))
         .localCheckpoint(true)
       val nextSum = obs.get("s").asInstanceOf[Long]
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"CC iter=$iter sum=$nextSum t=${(System.nanoTime() - t0) / 1e9}%.2f")
       converged = nextSum == labelSum
       labels = next
       labelSum = nextSum

@@ -502,7 +502,6 @@ object CosineLshIndex {
   def incrementalPairs(batch: DataFrame, idCol: String, embCol: String,
                        historyKeys: DataFrame, historyVecs: DataFrame,
                        bands: Int = DefaultBands, rowsPerBand: Int = DefaultRowsPerBand): DataFrame = {
-    graft.functions.CosineSimilarity.register(batch.sparkSession)
     // eager checkpoint: the batch frame is referenced SIX times below
     // (key bucketize, vector sides of both pair joins, batch-internal
     // candidate pairs) plus the broadcast-sizing count — without the cut

@@ -499,7 +499,6 @@ object IvfIndex {
     * superseded. Returns the new generation path. */
   private[graft] def build(spark: SparkSession, e0: DataFrame, root: String,
                            snap: Option[String]): String = {
-    graft.functions.CosineSimilarity.register(spark)
     val n = e0.count()
     require(n > 0,
       s"IvfIndex.build: cannot train an index over an empty corpus ($root)")

@@ -264,33 +264,6 @@ object SilverEtl {
     d
   }
 
-  /** One-pass variant for scale: every column's (mu, sd) computed in a
-    * SINGLE aggregate over the post-fill frame, then one combined filter —
-    * 2 scans total instead of the sequential loop's N+1. Semantics differ
-    * from the reference loop only when an outlier removed on an earlier
-    * column would materially shift a later column's stats (the loop
-    * computes each column's stats AFTER the previous filters; this
-    * computes all of them before any). At 100 TB prefer this and accept
-    * the one-shot stats; keep `fillAndRemoveOutliers` where byte-exact
-    * reference parity matters. */
-  def fillAndRemoveOutliersFused(df: DataFrame): DataFrame = {
-    var d = df
-    val fills = Mappings.DefaultValues.filter { case (f, _) => d.columns.contains(f) }
-    if (fills.nonEmpty) d = d.na.fill(fills)
-    val cols = OutlierColumns.filter(d.columns.contains)
-    if (cols.isEmpty) return d
-    val aggs = cols.flatMap(c => Seq(
-      avg(col(c)).as(s"mu_$c"), stddev_samp(col(c)).as(s"sd_$c")))
-    val row = d.agg(aggs.head, aggs.tail: _*).head()
-    val preds = cols.flatMap { c =>
-      val iMu = row.fieldIndex(s"mu_$c"); val iSd = row.fieldIndex(s"sd_$c")
-      if (row.isNullAt(iSd) || row.getDouble(iSd) <= 0) None
-      else Some(col(c).isNull ||
-        abs((col(c) - row.getDouble(iMu)) / row.getDouble(iSd)) < 4)
-    }
-    preds.reduceOption(_ && _).map(d.filter).getOrElse(d)
-  }
-
   def cleanse(df: DataFrame): DataFrame = fillAndRemoveOutliers(dedupLatest(df))
 
   // ------------------------------------------------------------ step 6

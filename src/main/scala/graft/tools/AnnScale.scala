@@ -22,17 +22,7 @@ object AnnScale {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft_ann")
     val factors = if (args.length > 2) args.drop(2).map(_.toInt).toSeq else Seq(10, 100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-ann-scale")
 
     def scaledDir(factor: Int): String = {
       val dir = s"$out/x$factor"
@@ -51,7 +41,7 @@ object AnnScale {
               s"+ $k * 1e-4 AS FLOAT))").as("embedding"))
         }
         copies.reduce(_.unionByName(_))
-          .repartition(cpus.toInt)
+          .repartition(graft.GraftSession.cpus)
           .write.mode(SaveMode.Overwrite).parquet(target.toString)
       }
       dir

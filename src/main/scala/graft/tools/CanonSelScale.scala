@@ -31,16 +31,7 @@ object CanonSelScale {
     val sizes =
       if (args.nonEmpty) args.toSeq.map(_.toLong)
       else Seq(20000L, 80000L, 320000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-canon-sel-scale")
 
     // synthetic corpus: ~40-token docs of hash-drawn words; every 10th
     // doc is a near-copy of a pseudo-random earlier doc (one word

@@ -32,16 +32,7 @@ object CurateIncrScale {
     val sizes =
       if (args.nonEmpty) args.toSeq.map(_.toLong)
       else Seq(10000L, 100000L, 500000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-curate-incr-scale")
 
     // synthetic docs with overlapping vocabulary (the LshAdvanceScale
     // corpus shape) plus the columns the quality gate reads

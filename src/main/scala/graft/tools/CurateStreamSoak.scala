@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Many-micro-batch soak of the STREAMING incremental curation path
@@ -18,16 +17,7 @@ object CurateStreamSoak {
   def main(args: Array[String]): Unit = {
     val batches = args.lift(0).map(_.toInt).getOrElse(20)
     val batchSize = args.lift(1).map(_.toLong).getOrElse(2000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-curate-stream-soak")
 
     // the CurateIncrScale corpus shape: overlapping vocabulary + the
     // quality-gate columns; ids ascend across batches (ingest contract)

@@ -39,16 +39,7 @@ object EmbIndexScale {
     val sizes =
       if (args.nonEmpty) args.toSeq.map(_.toLong)
       else Seq(10000L, 100000L, 500000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-emb-index-scale")
 
     // deterministic 64-dim corpus of hash-UNIQUE vectors (pairwise
     // cosine ~0 — near-dup LSH presumes near-dups are RARE; a clustered
@@ -135,7 +126,6 @@ object EmbIndexScale {
       .select(col("vec_id"),
         expr(s"transform(base, (x, j) -> x + eps * ($uExpr))").as("emb"))
       .localCheckpoint(true)
-    graft.functions.CosineSimilarity.register(spark)
     val truth = batchR.select(col("vec_id").as("dst"),
         pmod(col("vec_id") * 7919, lit(hR)).as("src"), col("emb").as("eb"))
       .join(histR.select(col("vec_id").as("src"), col("emb").as("ea")),

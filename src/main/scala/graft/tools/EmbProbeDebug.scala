@@ -16,18 +16,9 @@ import graft.operators.{CosineLsh, CosineLshIndex}
 object EmbProbeDebug {
   def main(args: Array[String]): Unit = {
     val root = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", "16m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-emb-probe-debug")
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+      sys.env.getOrElse("SPARK_GRAFT_MAXPART", "16m"))
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val gen = graft.store.GenLog.currentGen(fs, root).get.toString
@@ -48,7 +39,6 @@ object EmbProbeDebug {
       println(f"PHASE $tag%-24s ${(System.nanoTime() - t0) / 1e9}%.2f s")
       r
     }
-    graft.functions.CosineSimilarity.register(spark)
     val b = batch.select(col("vec_id").cast("long").as("__id"), col("emb"))
     val bKeys = time("bucketize-batch") {
       CosineLsh.bucketize(b, "__id", "emb", dim = 0, bands = bands,
@@ -63,7 +53,6 @@ object EmbProbeDebug {
         .select("src", "dst").distinct().localCheckpoint(true)
     }
     println(s"candidates=${histCand.count()}")
-    histCand.sparkSession.sparkContext.setLogLevel("ERROR")
     val bVecs = b.select(col("__id").as("dst"), col("emb").as("eb"))
     val fetched = time("phase2-vec-fetch") {
       histCand

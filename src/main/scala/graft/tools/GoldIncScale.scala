@@ -25,17 +25,7 @@ object GoldIncScale {
     val base = args.headOption.getOrElse("/tmp/graft_goldscale")
     val n = args.lift(1).map(_.toInt).getOrElse(40000)
     val churn = args.lift(2).map(_.toInt).getOrElse(500)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-gold-inc-scale")
 
     def silverRows(rows: Int, vf: String, months: Int): DataFrame = {
       val d = spark.range(rows).select(

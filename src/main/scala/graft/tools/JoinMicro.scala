@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Minimal BHJ-probe throughput isolation: 58M synthetic rows probed
@@ -9,13 +8,7 @@ import org.apache.spark.sql.functions._
   * key-packing decision. */
 object JoinMicro {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-join-micro")
     def time[T](tag: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"JOINMICRO $tag%-28s ${(System.nanoTime() - t0) / 1e9}%.2f s")

@@ -28,19 +28,7 @@ object LshAdvanceScale {
     val sizes =
       if (args.nonEmpty) args.toSeq.map(_.toLong)
       else Seq(10000L, 100000L, 500000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // match the Verify/Bench session configuration (fingerprints are
-      // xor-based and ANSI-safe since round 10; ansi=false kept for
-      // environment parity with the bench of record)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-lsh-advance-scale")
 
     // synthetic docs with overlapping vocabulary so band collisions are
     // realistic (shared shingles across id neighborhoods)

@@ -17,17 +17,7 @@ object MergeScale {
     val base = args.headOption.getOrElse("/tmp/graft_mergescale")
     val n = args.lift(1).map(_.toInt).getOrElse(20000)
     val churn = args.lift(2).map(_.toInt).getOrElse(500)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-merge-scale")
 
     def batch(keys: Int, name: String, date: String): DataFrame = {
       val d = spark.range(keys).select(

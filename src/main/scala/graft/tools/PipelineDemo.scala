@@ -18,9 +18,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_pipeline_demo").toString)
-    val spark = graft.GraftSession.local("graft-pipeline-demo",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-pipeline-demo")
 
     BronzeFixtures.write(base)
     val cfg = SilverEtl.RunConfig(s"$base/silver", s"$base/quarantine",

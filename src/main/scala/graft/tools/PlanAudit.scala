@@ -18,9 +18,7 @@ object PlanAudit {
         "p8_outlier_4sigma", "v2_ann_topk", "v7_ann_ivfpq",
         "a7_conditional_agg", "j7_multiway_star", "aj1_asof_join",
         "rj1_range_join", "sw1_session_window", "g1_rollup", "tx10_tfidf")
-    val spark = graft.GraftSession.local("graft-plan-audit",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-plan-audit")
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sf)
       val qe = df.queryExecution

@@ -20,9 +20,7 @@ object PlanDump {
     val suffix = args(2)
     val names = args.drop(3).toSeq
     outDir.mkdirs()
-    val spark = graft.GraftSession.local("graft-plan-dump",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-plan-dump")
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sf)
       df.collect() // finalize AQE

@@ -20,10 +20,7 @@ object RangeJoinBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val ms = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(53, 1000, 10000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder("graft-rangejoin-bench", cpus.toInt)
-      .master(s"local[$cpus]").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-rangejoin-bench")
 
     val prices = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select("l_extendedprice")

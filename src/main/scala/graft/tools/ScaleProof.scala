@@ -24,17 +24,7 @@ object ScaleProof {
       if (args.length > 3) args.drop(3).toSeq
       else Seq("dd1_dedup_exact", "dd4_minhash_lsh", "dd9_substring_dup",
         "cp2_curate_exact")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-scale-proof")
 
     val target = new org.apache.hadoop.fs.Path(s"$out/documents.parquet")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -50,7 +40,7 @@ object ScaleProof {
             .as("n_chars"))
       }
       copies.reduce(_.unionByName(_))
-        .repartition(cpus.toInt)
+        .repartition(graft.GraftSession.cpus)
         .write.mode(SaveMode.Overwrite).parquet(target.toString)
     }
 

@@ -45,7 +45,6 @@ class BinaryHammingSpec extends SparkSuite {
   }
 
   test("recall@3 vs exact cosine top-3 on the corpus") {
-    graft.functions.CosineSimilarity.register(spark)
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val q = e.filter(col("vec_id") < 10)

@@ -35,7 +35,6 @@ class BloomDedupSpec extends SparkSuite {
   test("the bloom prunes most genuinely-new rows away from the join") {
     val history = docs.filter(col("doc_id") < 400)
     val batch = docs.filter(col("doc_id") >= 400)
-    BloomContains.register(spark)
     val bloom = history.select(xxhash64(col("text")).as("_fp"))
       .stat.bloomFilter("_fp", 400L, 0.03)
     val b64 = Base64.getEncoder.encodeToString(BloomContains.serialize(bloom))

@@ -80,7 +80,6 @@ class CosineLshIndexSpec extends SparkSuite {
     val inc = CosineLshIndex.incrementalPairs(batch, "vec_id", "emb",
       CosineLshIndex.narrowKeysOf(spark, gen),
       CosineLshIndex.vecsOf(spark, gen))
-    graft.functions.CosineSimilarity.register(spark)
     val c = all.select(col("vec_id").cast("long").as("__id"),
       col("emb").cast("array<double>").as("emb"))
     val full = CosineLsh.candidatePairs(c, "__id", "emb", dim = 0)

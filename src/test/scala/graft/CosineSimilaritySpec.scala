@@ -8,7 +8,6 @@ import graft.functions.CosineSimilarity
 class CosineSimilaritySpec extends SparkSuite {
 
   test("matches the zip_with/aggregate HOF composition bit-for-bit") {
-    CosineSimilarity.register(spark)
     val df = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       .limit(50)
@@ -26,7 +25,6 @@ class CosineSimilaritySpec extends SparkSuite {
   }
 
   test("self-similarity is 1.0; mismatched lengths yield null; floats cast") {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1.0, 2.0, 3.0), Array(1.0, 2.0, 3.0)),
@@ -45,7 +43,6 @@ class CosineSimilaritySpec extends SparkSuite {
   }
 
   test("zero-norm vectors yield null, not NaN, in both eval paths") {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     // codegen path: zero vector and empty arrays against a real vector
     val df = Seq(
@@ -67,7 +64,6 @@ class CosineSimilaritySpec extends SparkSuite {
 
   test("a NULL array element yields NULL, never a fabricated 0.0 — both " +
     "evaluation paths (the zip_with/aggregate HOF parity contract)") {
-    CosineSimilarity.register(spark)
     val viaSql = spark.sql(
       "SELECT graft_cosine(array(1.0d, cast(null as double)), " +
         "array(1.0d, 1.0d)) AS cs").head()
@@ -85,7 +81,6 @@ class CosineSimilaritySpec extends SparkSuite {
   }
 
   test("interpreted eval agrees with codegen path") {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     val df = Seq((Array(0.3, -0.7, 0.2), Array(0.1, 0.9, -0.5))).toDF("a", "b")
     val viaCodegen = df.withColumn("cs", expr("graft_cosine(a, b)"))

@@ -11,7 +11,6 @@ import graft.queries.DedupExtQueries
 class DedupLshSpec extends SparkSuite {
 
   test("bucketed dd6 equals the all-pairs formulation") {
-    functions.CosineSimilarity.register(spark)
     val corpus = DedupExtQueries.plantedCorpus(spark, sf)
     val a = corpus.select(col("vec_id").as("keep_id"), col("emb").as("ea"))
     val b = corpus.select(col("vec_id").as("dup_id"), col("emb").as("eb"))

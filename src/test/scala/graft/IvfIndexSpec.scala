@@ -27,7 +27,6 @@ class IvfIndexSpec extends SparkSuite {
   }
 
   test("assignCells is a pure projection — zero shuffles per Lloyd iteration") {
-    graft.functions.CosineSimilarity.register(spark)
     import spark.implicits._
     // localCheckpoint pins the input as an RDD scan — a LocalRelation
     // would let ConvertToLocalRelation pre-evaluate the whole

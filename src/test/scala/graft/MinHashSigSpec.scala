@@ -28,7 +28,6 @@ class MinHashSigSpec extends SparkSuite {
   }
 
   private def fusedSigs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    MinHashSig.register(docs.sparkSession)
     docs
       .select(col(idCol).as("__id"),
         split(lower(trim(regexp_replace(col(textCol), "\\s+", " "))), " ").as("toks"))
@@ -111,7 +110,6 @@ class MinHashSigSpec extends SparkSuite {
 
   test("numPerms accepts foldable INT expressions; non-int still refused") {
     import spark.implicits._
-    graft.functions.MinHashSig.register(spark)
     val d = Seq((1L, "alpha beta gamma")).toDF("doc_id", "text")
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
     d.createOrReplaceTempView("mhs_fold")

@@ -22,7 +22,6 @@ class QuantizationSpec extends SparkSuite {
   }
 
   test("per-vector max error <= half a quantization step; cosine >= 0.9999") {
-    graft.functions.CosineSimilarity.register(spark)
     val bad = deqCorpus
       .withColumn("err", array_max(zip_with(col("emb"), col("deq"),
         (a, b) => abs(a - b))))
@@ -33,7 +32,6 @@ class QuantizationSpec extends SparkSuite {
   }
 
   test("brute-force ANN on the dequantized corpus: recall@5 >= 0.94") {
-    graft.functions.CosineSimilarity.register(spark)
     def top5(vecCol: String): Set[(Long, Long)] = {
       val c = deqCorpus.select(col("vec_id").as("nid"), col(vecCol).as("eb"))
       val q = deqCorpus.filter(col("vec_id") < 10)

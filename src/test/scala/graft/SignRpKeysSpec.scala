@@ -9,7 +9,6 @@ import graft.functions.SignRpKeys
 class SignRpKeysSpec extends SparkSuite {
 
   test("interpreted eval agrees with the codegen path") {
-    SignRpKeys.register(spark)
     import spark.implicits._
     val vec = Array(0.3, -0.7, 0.2, 0.9, -0.1)
     val viaCodegen = Seq(Tuple1(vec)).toDF("e")
@@ -36,7 +35,6 @@ class SignRpKeysSpec extends SparkSuite {
   }
 
   test("near-identical vectors collide on every band; scale-invariance of signs") {
-    SignRpKeys.register(spark)
     import spark.implicits._
     val base = Array.tabulate(64)(j => math.sin(j * 1.7) * (1 + j % 5))
     val near = base.map(_ * 1.0003) // pure positive scaling + tiny drift
@@ -49,7 +47,6 @@ class SignRpKeysSpec extends SparkSuite {
 
   test("degenerate geometry is refused loudly; a null element yields " +
     "NULL keys instead of bucketing on fabricated zeros") {
-    SignRpKeys.register(spark)
     // rowsPerBand = 0 would emit identical all-zero keys for EVERY
     // vector — the band join degenerates to N×N with no error
     intercept[IllegalArgumentException] {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.SignatureAgreement
 
 /** Native signature-agreement expression: parity with the interpreted HOF
   * formulation on real MinHash signatures, null on malformed pairs, and
@@ -9,7 +8,6 @@ import graft.functions.SignatureAgreement
 class SignatureAgreementSpec extends SparkSuite {
 
   test("agrees with the zip_with/aggregate HOF formulation on real signatures") {
-    SignatureAgreement.register(spark)
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"),
         split(lower(trim(regexp_replace(col("text"), "\\s+", " "))), " ").as("toks"))
@@ -31,7 +29,6 @@ class SignatureAgreementSpec extends SparkSuite {
   }
 
   test("identical signatures → 1.0; mismatched lengths → null") {
-    SignatureAgreement.register(spark)
     import spark.implicits._
     val df = Seq((Array(1L, 2L, 3L), Array(1L, 2L, 3L)),
       (Array(1L, 2L, 3L), Array(1L, 9L, 3L)))

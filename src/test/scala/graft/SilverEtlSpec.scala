@@ -167,22 +167,6 @@ class SilverEtlSpec extends SparkSuite {
     assert(stats.avgCompletenessScore > 0 && stats.avgCompletenessScore <= 1)
   }
 
-  test("fused one-pass outlier filter agrees with the sequential loop on non-interacting outliers") {
-    import spark.implicits._
-    // 40 well-behaved rows + one extreme outlier per column; removing the
-    // price outlier barely moves the area stats, so both variants must
-    // drop exactly the two outliers
-    val rows = (1 to 40).map(i =>
-      (1.0e9 + i * 1.0e7, 50.0 + i)) :+ (9.9e12, 60.0) :+ (1.5e9, 4.0e9)
-    val df = rows.toDF("min_selling_price", "total_area")
-    val seqOut = SilverEtl.fillAndRemoveOutliers(df)
-    val fusedOut = SilverEtl.fillAndRemoveOutliersFused(df)
-    assert(seqOut.count() === 40)
-    assert(fusedOut.count() === 40)
-    assert(seqOut.exceptAll(fusedOut).count() === 0)
-    assert(fusedOut.exceptAll(seqOut).count() === 0)
-  }
-
   test("persisted silver schema has no internal witness columns") {
     stats // force the run
     // _has_valid_coords/_has_valid_price are run-internal quality
